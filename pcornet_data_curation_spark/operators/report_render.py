@@ -13,6 +13,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from pcornet_data_curation_spark.operators.reports import _pct_expr
+
 TOP_N = 50  # print limit parity (reference obs=50, %prnt)
 
 
@@ -61,13 +63,7 @@ def render_run_report(spark: SparkSession, output_root: str) -> str:
             F.sum("records").alias("records"),
             F.sum("fail_records").alias("fail_records"),
         )
-        .withColumn(
-            "fail_pct",
-            F.when(
-                F.col("records") > 0,
-                F.floor(F.col("fail_records") * 10000.0 / F.col("records")) / 100.0,
-            ).otherwise(F.lit(0.0)),
-        )
+        .withColumn("fail_pct", _pct_expr(F.col("fail_records"), F.col("records")))
         .orderBy(F.col("fail_records").desc(), "rule_id")
         .limit(TOP_N)
         .toPandas()

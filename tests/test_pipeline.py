@@ -1,6 +1,7 @@
 """End-to-end pipeline + checkpoint/resume semantics (FIXTURES.md §4)."""
 
 import glob
+import json
 import os
 import shutil
 
@@ -10,7 +11,7 @@ from pyspark.sql import functions as F
 from pcornet_data_curation_spark.config import PipelineConfig
 from pcornet_data_curation_spark.datagen.pages import pages_df
 from pcornet_data_curation_spark.plans.checkpoint import Manifest
-from pcornet_data_curation_spark.plans.pipeline import run_pipeline
+from pcornet_data_curation_spark.plans.pipeline import EXPECTED_REPORTS, run_pipeline
 
 N = 800
 
@@ -61,6 +62,42 @@ def test_pipeline_end_to_end(spark, outdir):
     assert not any(t.startswith(("11.", "12.", "13.")) for t in tripped)
     lin = spark.read.parquet(res["lineage"]).toPandas()
     assert (lin["status"] == "ok").all() and len(lin) >= 9
+    # one lineage row per report, and it times the write: the report's
+    # _SUCCESS marker lands inside the row's [started_at, ended_at]
+    rep = lin[lin["stage"].str.startswith("report_")].set_index("stage")
+    assert sorted(rep.index) == sorted(f"report_{n}" for n in EXPECTED_REPORTS)
+    for name in EXPECTED_REPORTS:
+        row = rep.loc[f"report_{name}"]
+        written = os.path.getmtime(os.path.join(res["reports"], name, "_SUCCESS"))
+        assert row["started_at"] <= written <= row["ended_at"], name
+    _assert_metrics_match_golden(spark.read.parquet(res["metrics"]).collect())
+
+
+# wall-clock / run-location rows that differ between identical runs
+_UNPINNED = {("report_staleness", "age_sec"), ("run_metadata", "output_root")}
+
+
+def _assert_metrics_match_golden(rows):
+    """The metrics table equals the recorded 800-doc default-config run
+    (tests/golden/metrics_800.json). Keys and strings compare exactly;
+    numbers (resultn, and resultc where it renders resultn) to a relative
+    1e-9, since avg merge order can move the last bit."""
+    with open(os.path.join(os.path.dirname(__file__), "golden", "metrics_800.json")) as f:
+        golden = json.load(f)
+    got = [
+        list(r)
+        for r in rows
+        if (r["dc_name"], r["statistic"]) not in _UNPINNED
+        and (r["dc_name"], r["category"]) not in _UNPINNED
+    ]
+    got.sort(key=lambda r: ["" if x is None else str(x) for x in r])
+    assert [r[:4] for r in got] == [r[:4] for r in golden]
+    for g, w in zip(got, golden):
+        if w[5] is None:
+            assert g[4:] == w[4:], g
+        else:
+            assert float(g[4]) == pytest.approx(float(w[4]), rel=1e-9), g
+            assert g[5] == pytest.approx(w[5], rel=1e-9), g
 
 
 def test_resume_skips_done_and_matches_cold_run(spark, outdir):
